@@ -11,6 +11,27 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Bound on Spark's cache of generated classes
+    * (`spark.sql.codegen.cache.maxEntries`; Spark's default is 100).
+    *
+    * The cache maps generated source to its compiled class, so a re-run of
+    * a plan shape skips Janino compilation and runs code the JIT has
+    * already compiled. graft's plans generate about 50 classes per query.
+    * Measured working set (Spark 4.1, sf0.1, local[4]): one pass of the
+    * benchmark's `analytics` workload generates about 750 classes and one
+    * pass of `lake_refresh` about 650. At 100 entries every query evicted
+    * the classes of the ones before it, so every re-run compiled again.
+    * 4096 holds several passes. A held entry costs about 6 KB of Metaspace
+    * (after a full GC), so a full cache costs about 25 MB.
+    *
+    * The cache is JVM-wide and static. It is sized once, from the conf of
+    * the first session that generates code in the JVM, which is in
+    * practice the first SparkContext. A `getOrCreate` onto an existing
+    * context keeps the bound that context set. On a cluster, each executor
+    * sizes its own cache from the same conf.
+    */
+  val CodegenCacheEntries = 4096
+
   /** Cluster-facing tuning knobs, surfaced so a deployment sizes them to
     * its data instead of editing code:
     *
@@ -42,6 +63,7 @@ object GraftSession {
       // which Spark only reads as a long (see SparkEntry.evSec)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .withExtensions(new graft.plans.GraftExtensions)
 
   /** Local session for tests/benchmarks. */

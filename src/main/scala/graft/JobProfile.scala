@@ -36,7 +36,7 @@ object JobProfile {
     spark.sparkContext.addSparkListener(listener)
 
     names.foreach { name =>
-      val full = SparkEntry.queries.keys.find(_.startsWith(name)).getOrElse(name)
+      val full = SparkEntry.resolve(name)
       jobs.synchronized(jobs.clear()); done.synchronized(done.clear())
       val t0 = System.nanoTime()
       SparkEntry.queries(full)(spark, sfDir).queryExecution.toRdd.foreach(_ => ())

@@ -27,7 +27,7 @@ object PlanDump {
     Files.createDirectories(Paths.get(outDir))
     val passes = sys.env.getOrElse("SPARK_GRAFT_PLAN_PASSES", "2").toInt
     names.foreach { name =>
-      val full = SparkEntry.queries.keys.find(_.startsWith(name)).getOrElse(name)
+      val full = SparkEntry.resolve(name)
       spark.sparkContext.setJobDescription(full)
       try {
         val df = SparkEntry.queries(full)(spark, sfDir)

@@ -35,7 +35,7 @@ object StreamProfile {
           e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     })
     names.foreach { name =>
-      val full = SparkEntry.queries.keys.find(_.startsWith(name)).getOrElse(name)
+      val full = SparkEntry.resolve(name)
       val t0 = System.nanoTime()
       SparkEntry.queries(full)(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
       println(f"== $full: ${(System.nanoTime() - t0) / 1e9}%.2f s total")

@@ -1776,16 +1776,6 @@ object Graph {
     if (mEdges <= driverPeelMaxEdges) {
       import scala.collection.mutable
       val spark = e0.sparkSession
-      // phase timing for the optimization rounds: stderr-only, off unless
-      // SPARK_GRAFT_TIMING=1 — zero cost in normal runs
-      val timing = sys.env.get("SPARK_GRAFT_TIMING").contains("1")
-      var tPrev = System.nanoTime()
-      def tmark(phase: String): Unit = if (timing) {
-        val now = System.nanoTime()
-        System.err.println(f"[ktruss] $phase: ${(now - tPrev) / 1e9}%.2f s")
-        tPrev = now
-      }
-      tmark("count")
       val m = mEdges.toInt
       val ea = new Array[Long](m); val eb = new Array[Long](m)
       val sup = new Array[Long](m); val loss = new Array[Long](m)
@@ -1853,7 +1843,6 @@ object Graph {
         aedge(acur(endB(di))) = di; acur(endB(di)) += 1
         di += 1
       }
-      tmark("collect+index")
       // oriented scoring: forward CSR sorted by neighbor id, one packed
       // (nbr << 32 | eid) long per oriented edge so a single Arrays.sort
       // orders both in tandem
@@ -1930,7 +1919,6 @@ object Graph {
       while (i < m) { sup(i) = supA.get(i); i += 1 }
       // processed = removed; a triangle is charged when its FIRST edge
       // is processed, so flanks still in the queue DO get decremented
-      tmark("score")
       val processed = new Array[Boolean](m)
       val queued = new Array[Boolean](m)
       // every edge enqueues at most once (queued gate), so a flat int
@@ -1970,7 +1958,6 @@ object Graph {
           ap += 1
         }
       }
-      tmark("cascade")
       // survivors ship back whole — support now lives only on the
       // driver, so there is no distributed frame to delta-join against,
       // and the row volume is bounded by the same guard the collect was
@@ -1993,7 +1980,6 @@ object Graph {
         }
         i += 1
       }
-      tmark("survivors")
       val bc = spark.sparkContext.broadcast((sa, sb, ss))
       val nSlices = math.max(1, nSurv / 500000 + 1)
       return spark.sparkContext.parallelize(0 until nSlices, nSlices)

@@ -3,16 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared single session for all suites (one JVM under Test/fork). */
+/** Shared single session for all suites (one JVM under Test/fork): the
+  * engine's defaults from `GraftSession.builder`, sized for tests.
+  */
 object SparkSuite {
-  lazy val session: SparkSession = SparkSession.builder()
+  lazy val session: SparkSession = GraftSession.builder("graft-test")
     .master("local[4]")
-    .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.plans.GraftExtensions)
     .getOrCreate()
 }
 
